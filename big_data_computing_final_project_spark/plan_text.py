@@ -52,16 +52,19 @@ def plan_fingerprint(df: DataFrame) -> str:
 # --- pure-plan query registry (shared by tests/test_plan_snapshots.py and
 # bench.py, VERDICT r9 item 2) ---------------------------------------------
 #
-# PLAN_ONLY: queries whose builder runs NO Spark job — their fresh-build
-# physical plan is a pure function of code + static stats, so exact plan
-# text (and any hash over it) is comparable across sessions, boxes, and
-# session histories. Everything else (ML fits, iterative loops,
-# localCheckpoint materialization, collected sketch state) builds a plan
-# that can legitimately differ with session history — q36's fresh-build
-# plan has 88 nodes in a bare session but 106 after one in-session
-# execution (cached shared LSH state changes the downstream plan), with
-# all 247 snapshot pins still green. Cross-run aggregates must therefore
-# hash ONLY this subset.
+# PLAN_ONLY: queries whose builder derives NO data-dependent state — their
+# fresh-build physical plan is a pure function of code + static stats, so
+# exact plan text (and any hash over it) is comparable across sessions,
+# boxes, and session histories. The builder still runs Spark jobs: every
+# catalog.load_table reads parquet without a declared schema, so each
+# build launches schema-inference jobs — jobs whose output (the file
+# schema) is fixed by the data files, not by session history. Everything
+# else (ML fits, iterative loops, localCheckpoint materialization,
+# collected sketch state) builds a plan that can legitimately differ with
+# session history — q36's fresh-build plan has 88 nodes in a bare
+# session but 106 after one in-session execution (cached shared LSH state
+# changes the downstream plan), with all 247 snapshot pins still green.
+# Cross-run aggregates must therefore hash ONLY this subset.
 #
 # UNSTABLE: multi-COUNT(DISTINCT) Expand rewrites order their column lists
 # nondeterministically across sessions (ExpressionSet iteration) — same

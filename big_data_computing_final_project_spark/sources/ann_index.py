@@ -153,7 +153,8 @@ def save_ivf_index_from_store(
     from ..catalog import load_table
     from ..plans.similarity import as_double, norm
 
-    from ..streaming.events import _IVF_ASSIGN_SCHEMA, _read_store_deltas
+    from ..streaming.events import _IVF_ASSIGN_SCHEMA
+    from ..streaming.store import read_deltas
 
     center_rows = (
         spark.read.schema("cell int, centroid array<double>")
@@ -161,7 +162,7 @@ def save_ivf_index_from_store(
         .orderBy("cell")
         .collect()
     )
-    assign = _read_store_deltas(
+    assign = read_deltas(
         spark, os.path.join(store_dir, "assign"), _IVF_ASSIGN_SCHEMA
     ).select("vec_id", "cell")
     emb = load_table(spark, sf_dir, "embeddings").select(
@@ -233,12 +234,13 @@ def save_pq_index_from_store(
     No encode runs — the store's codes are already bit-identical to a
     batch rebuild (the shared _pq_encode_frame kernel), so the promoted
     index serves q200's exact ranking."""
-    from ..streaming.events import _PQ_CODES_SCHEMA, _read_store_deltas
+    from ..streaming.events import _PQ_CODES_SCHEMA
+    from ..streaming.store import read_deltas
 
     books = spark.read.schema("m int, k int, centroid array<double>").parquet(
         os.path.join(store_dir, "books")
     )
-    codes = _read_store_deltas(
+    codes = read_deltas(
         spark, os.path.join(store_dir, "codes"), _PQ_CODES_SCHEMA
     ).select("vec_id", "codes", "nc")
     n_m = books.agg(F.countDistinct("m").alias("n")).collect()[0]["n"]

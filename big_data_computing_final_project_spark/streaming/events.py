@@ -23,6 +23,24 @@ from pyspark.sql import types as T
 
 from ..catalog import _stored_as_nanos, epoch_us, normalize_events_ts
 from ..functions.stats import dec_sum
+from .store import compact, read_deltas, stage_id, write_delta
+
+
+def _cols(schema: str) -> list[str]:
+    return [c.split()[0] for c in schema.split(", ")]
+
+
+def _merge(schema: str, sum_by: tuple[str, ...] | None = None) -> tuple:
+    """A ``store.compact`` part for ``schema``: sum every other column per
+    the ``sum_by`` key columns (``()`` sums all deltas to one row), or —
+    without ``sum_by`` — rewrite the deltas unchanged (their rows are
+    unique across deltas by the ingest contract)."""
+    cols = _cols(schema)
+    if sum_by is None:
+        return schema, lambda df: df.select(*cols)
+    return schema, lambda df: df.groupBy(*sum_by).agg(
+        *(F.sum(c).alias(c) for c in cols if c not in sum_by)
+    )
 
 
 def stream_events(spark: SparkSession, sf_dir: str, watermark: str = "1 hour") -> DataFrame:
@@ -253,10 +271,8 @@ def run_stream_tdigest(
     from ..operators.sketches import tdigest_partials
 
     def append_partials(batch: DataFrame, batch_id: int) -> None:
-        (
-            tdigest_partials(batch, key_col, value_col, delta)
-            .write.mode("overwrite")
-            .parquet(os.path.join(store_dir, f"batch_id={batch_id}"))
+        write_delta(
+            tdigest_partials(batch, key_col, value_col, delta), store_dir, batch_id
         )
 
     _run_foreach_batch(
@@ -269,9 +285,11 @@ def sketch_store_quantiles(
 ) -> DataFrame:
     """Answer per-key quantiles from an incremental sketch store (KBs),
     merging all appended partials — the 100 TB corpus itself is not read."""
-    from ..operators.sketches import tdigest_finalize
+    from ..operators.sketches import _SKETCH_SCHEMA, tdigest_finalize
 
-    partials = spark.read.parquet(store_dir).select("key", "means", "weights")
+    partials = read_deltas(spark, store_dir, _SKETCH_SCHEMA).select(
+        "key", "means", "weights"
+    )
     return tdigest_finalize(partials, probs, delta)
 
 
@@ -292,10 +310,8 @@ def run_stream_heavy_hitters(
     from ..operators.sketches import heavy_hitters_partials
 
     def append_partials(batch: DataFrame, batch_id: int) -> None:
-        (
-            heavy_hitters_partials(batch, items_col, capacity)
-            .write.mode("overwrite")
-            .parquet(os.path.join(store_dir, f"batch_id={batch_id}"))
+        write_delta(
+            heavy_hitters_partials(batch, items_col, capacity), store_dir, batch_id
         )
 
     _run_foreach_batch(
@@ -307,9 +323,9 @@ def hh_store_topk(spark: SparkSession, store_dir: str, k: int = 20) -> DataFrame
     """Certified top-k from an incremental heavy-hitters store: merges all
     appended truncated-counter partials; batch_id comes back as a partition
     column from the ``batch_id=N`` directory layout."""
-    from ..operators.sketches import heavy_hitters_finalize
+    from ..operators.sketches import _HH_PARTIAL_SCHEMA, heavy_hitters_finalize
 
-    partials = spark.read.parquet(store_dir)
+    partials = read_deltas(spark, store_dir, _HH_PARTIAL_SCHEMA)
     return heavy_hitters_finalize(partials, k, partial_id_cols=("batch_id", "pid"))
 
 
@@ -353,13 +369,10 @@ def run_stream_dq_audit(
     own batch_id directory, so at-least-once delivery still sums to
     exactly-once counts.
     """
-    import os
-
     from ..operators.quality import check_predicates
 
     def audit(batch: DataFrame, batch_id: int) -> None:
-        report = check_predicates(batch, checks)
-        report.write.mode("overwrite").parquet(os.path.join(store_dir, f"batch_id={batch_id}"))
+        write_delta(check_predicates(batch, checks), store_dir, batch_id)
 
     _run_foreach_batch(
         events, audit, checkpoint_dir, timeout_sec, "run_stream_dq_audit"
@@ -395,9 +408,7 @@ def run_stream_integrity_audit(
             F.count(F.lit(1)).alias("n_rows"),
             F.count(F.when(F.col(fk_col).isNull(), 1)).alias("n_null_fk"),
         )
-        counts.write.mode("overwrite").parquet(
-            os.path.join(store_dir, "counts", f"batch_id={batch_id}")
-        )
+        write_delta(counts, os.path.join(store_dir, "counts"), batch_id)
         orphans = (
             batch.filter(F.col(fk_col).isNotNull())
             .join(
@@ -408,9 +419,7 @@ def run_stream_integrity_audit(
             .groupBy(F.col(fk_col).alias("fk"))
             .agg(F.count(F.lit(1)).alias("n"))
         )
-        orphans.write.mode("overwrite").parquet(
-            os.path.join(store_dir, "orphans", f"batch_id={batch_id}")
-        )
+        write_delta(orphans, os.path.join(store_dir, "orphans"), batch_id)
 
     _run_foreach_batch(
         facts, audit, checkpoint_dir, timeout_sec, "run_stream_integrity_audit"
@@ -422,7 +431,7 @@ def integrity_report_from_store(spark: SparkSession, store_dir: str) -> DataFram
     rows, distinct orphan keys — reads only the staged partials (counts
     are 1 row/batch; orphans are linear in actual violations)."""
     counts = (
-        _read_store_deltas(
+        read_deltas(
             spark, os.path.join(store_dir, "counts"), "n_rows bigint, n_null_fk bigint"
         )
         .agg(
@@ -432,9 +441,9 @@ def integrity_report_from_store(spark: SparkSession, store_dir: str) -> DataFram
     )
     odir = os.path.join(store_dir, "orphans")
     if os.path.exists(odir):
+        # schema inferred: fk's type follows the audited fact column
         orph = (
-            spark.read.option("basePath", odir)
-            .parquet(f"{odir}/batch_id=*")
+            spark.read.parquet(odir)
             .agg(
                 F.coalesce(F.sum("n"), F.lit(0)).cast("bigint").alias("n_orphans"),
                 F.countDistinct("fk").cast("bigint").alias("n_orphan_keys"),
@@ -451,7 +460,7 @@ def dq_store_report(spark: SparkSession, store_dir: str) -> DataFrame:
     """Fold the per-batch audit store into one report (sum of additive
     violation counts per constraint)."""
     return (
-        _read_store_deltas(
+        read_deltas(
             spark, store_dir, "constraint string, n_violations bigint, n_checked bigint"
         )
         .groupBy("constraint")
@@ -483,6 +492,13 @@ def mixture_from_store(spark: SparkSession, store_dir: str) -> DataFrame:
     )
 
 
+_KEEPERS_SCHEMA = "fp string, keeper_source string, keeper_doc_id long"
+_EDGES_SCHEMA = "fp string, keeper_source string, dup_source string, n_docs bigint"
+_VOLUME_SCHEMA = (
+    "source string, lang string, n_docs bigint, n_tokens bigint, n_chars bigint"
+)
+
+
 def _dup_flow_ingest(
     batch: DataFrame, batch_id: int, store_dir: str, kept_dir: str | None = None
 ) -> None:
@@ -490,8 +506,8 @@ def _dup_flow_ingest(
     rank the batch within fp, look up the keeper store for batches < this
     one, stage this batch's new keepers and duplicate-flow edges under
     their batch_id directories (idempotent on replay; ids remap above the
-    compaction floor — see _effective_batch_id — so a replay of a folded
-    raw id can never overwrite the compacted keeper/edge history).
+    compaction floor — see store.stage_id — so a replay of a folded raw id
+    can never overwrite the compacted keeper/edge history).
 
     ``kept_dir`` (round-10, the ingest-suite path): additionally stage a
     per-source (kept_docs, kept_tokens) partial over THIS batch's new
@@ -501,10 +517,7 @@ def _dup_flow_ingest(
     incrementally without ever re-reading the corpus."""
     spark = batch.sparkSession
     keepers_dir = os.path.join(store_dir, "keepers")
-    # heal a crashed compaction BEFORE writing (see _effective_batch_id)
-    _recover_compaction(keepers_dir)
-    _recover_compaction(os.path.join(store_dir, "edges"))
-    eff_id = _effective_batch_id(store_dir, batch_id)
+    eff_id = stage_id(store_dir, batch_id, "keepers", "edges")
     w = Window.partitionBy("fp").orderBy("doc_id")
     cols = ["doc_id", "source", "fp"] + (["n_toks"] if kept_dir is not None else [])
     ranked = batch.select(*cols).withColumn(
@@ -515,9 +528,7 @@ def _dup_flow_ingest(
     # missing the column), which simply disables the self-edge guard for
     # that row, matching the old behavior
     prior = (
-        _read_store_deltas(
-            spark, keepers_dir, "fp string, keeper_source string, keeper_doc_id long"
-        )
+        read_deltas(spark, keepers_dir, _KEEPERS_SCHEMA)
         .where(F.col("batch_id") < eff_id)
         .select(
             "fp",
@@ -534,20 +545,23 @@ def _dup_flow_ingest(
         new_keeper_rows = hit.where(
             F.col("store_keeper").isNull() & (F.col("rn") == 1)
         )
-        new_keeper_rows.select(
-            "fp",
-            F.col("source").alias("keeper_source"),
-            F.col("doc_id").alias("keeper_doc_id"),
-        ).write.mode("overwrite").parquet(
-            os.path.join(keepers_dir, f"batch_id={eff_id}")
+        write_delta(
+            new_keeper_rows.select(
+                "fp",
+                F.col("source").alias("keeper_source"),
+                F.col("doc_id").alias("keeper_doc_id"),
+            ),
+            keepers_dir,
+            eff_id,
         )
         if kept_dir is not None:
-            k_eff = _effective_batch_id(kept_dir, batch_id, flat=True)
-            new_keeper_rows.groupBy("source").agg(
-                F.count(F.lit(1)).cast("bigint").alias("kept_docs"),
-                F.sum("n_toks").cast("bigint").alias("kept_tokens"),
-            ).write.mode("overwrite").parquet(
-                os.path.join(kept_dir, f"batch_id={k_eff}")
+            write_delta(
+                new_keeper_rows.groupBy("source").agg(
+                    F.count(F.lit(1)).cast("bigint").alias("kept_docs"),
+                    F.sum("n_toks").cast("bigint").alias("kept_tokens"),
+                ),
+                kept_dir,
+                stage_id(kept_dir, batch_id),
             )
         # within-batch keeper source per fp (the rn==1 row's source)
         batch_first = hit.where(F.col("rn") == 1).select(
@@ -577,9 +591,7 @@ def _dup_flow_ingest(
         edges = dup_rows.groupBy("fp", "keeper_source", "dup_source").agg(
             F.count(F.lit(1)).alias("n_docs")
         )
-        edges.write.mode("overwrite").parquet(
-            os.path.join(store_dir, "edges", f"batch_id={eff_id}")
-        )
+        write_delta(edges, os.path.join(store_dir, "edges"), eff_id)
     finally:
         hit.unpersist()
 
@@ -640,12 +652,7 @@ def dup_flow_matrix_from_store(spark: SparkSession, store_dir: str) -> DataFrame
     """q146's (keeper_source, dup_source, n_docs, n_groups) matrix from an
     incremental dup-flow store — read only the edge deltas (linear in
     duplicates), never the corpus."""
-    edges_dir = os.path.join(store_dir, "edges")
-    edges = _read_store_deltas(
-        spark,
-        edges_dir,
-        "fp string, keeper_source string, dup_source string, n_docs bigint",
-    )
+    edges = read_deltas(spark, os.path.join(store_dir, "edges"), _EDGES_SCHEMA)
     return (
         edges.groupBy("keeper_source", "dup_source")
         .agg(
@@ -671,12 +678,11 @@ def _stage_bin_counts(
     binned: DataFrame, batch_id: int, store_dir: str, key_cols: list[str]
 ) -> None:
     # batch_id arrives pre-remapped above the store's compaction floor
-    # (see _effective_batch_id) by every caller.
-    (
-        binned.groupBy(*key_cols, "bin")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .write.mode("overwrite")
-        .parquet(os.path.join(store_dir, f"batch_id={batch_id}"))
+    # (see store.stage_id) by every caller.
+    write_delta(
+        binned.groupBy(*key_cols, "bin").agg(F.count(F.lit(1)).alias("n")),
+        store_dir,
+        batch_id,
     )
 
 
@@ -705,7 +711,7 @@ def _psi_fold(
     # zero micro-batches processed: empty fold -> ref-only bins, n_cur = 0
     # via the full_outer + fill below (uniform empty-store contract)
     cur = (
-        _read_store_deltas(spark, store_dir, _counts_read_schema(key_cols))
+        read_deltas(spark, store_dir, _counts_read_schema(key_cols))
         .groupBy(*key_cols, "bin")
         .agg(F.sum("n").alias("n_cur"))
     )
@@ -758,7 +764,7 @@ def _monitor_ingest(
     (the log dir follows the same effective id so a fresh-checkpoint
     restart can't overwrite a genuine old log row either)."""
     spark = batch.sparkSession
-    batch_id = _effective_batch_id(counts_dir, batch_id, flat=True)
+    batch_id = stage_id(counts_dir, batch_id)
     _stage_bin_counts(binner(batch), batch_id, counts_dir, key_cols)
     rows = _psi_fold(spark, counts_dir, ref_counts, key_cols, 1e-9).collect()
     if key_cols:
@@ -780,9 +786,7 @@ def _monitor_ingest(
         n_cur = int(sum(r["n_cur"] for r in rows))
         out = [(psi_total, n_cur, psi_total >= psi_alert)]
         schema = "psi_total double, n_cur bigint, alert boolean"
-    spark.createDataFrame(out, schema).write.mode("overwrite").parquet(
-        os.path.join(log_dir, f"batch_id={batch_id}")
-    )
+    write_delta(spark.createDataFrame(out, schema), log_dir, batch_id)
 
 
 def _keyed_binner(ref_edges: DataFrame, n_bins: int):
@@ -829,7 +833,7 @@ def run_stream_psi_counts(
             batch.select(
                 bin_expr(F.col("v"), F.lit(lo), F.lit(width), n_bins).alias("bin")
             ),
-            _effective_batch_id(store_dir, batch_id, flat=True),
+            stage_id(store_dir, batch_id),
             store_dir,
             [],
         )
@@ -886,14 +890,11 @@ def ks_from_digest_store(
         merge_partial_rows,
     )
 
-    _recover_compaction(store_dir)
-    if not os.path.exists(store_dir):
-        return float("nan"), 0
     # explicit schema: an empty micro-batch stages a part-file-less
     # batch_id dir (tdigest_partials yields nothing for zero rows), and
     # schema inference over zero parquet files would raise instead of
     # reading empty — the _psi_fold hardening contract
-    store = spark.read.schema(_SKETCH_SCHEMA).parquet(store_dir)
+    store = read_deltas(spark, store_dir, _SKETCH_SCHEMA)
     if key is not None:
         store = store.where(F.col("key") == key)
     else:
@@ -915,32 +916,11 @@ def ks_from_digest_store(
     )
 
 
-def _read_store_deltas(spark: SparkSession, store_dir: str, schema: str) -> DataFrame:
-    """Shared staged-store delta reader (ADVICE r9 fold — this pattern was
-    repeated verbatim at every ``*_from_store`` / prior-state site): heal a
-    crashed compaction, then read every ``batch_id=*`` delta with the
-    DECLARED schema plus the ``batch_id`` partition column. The explicit
-    schema is the PSI-store lesson — an empty micro-batch stages a
-    part-file-less batch_id dir, and schema INFERENCE over zero parquet
-    files raises; the declared schema reads it as simply empty. A store
-    that has never been written returns an empty frame of the same shape,
-    so every fold's zero-batch contract is uniform."""
-    _recover_compaction(store_dir)
-    full = schema + ", batch_id bigint"
-    if not os.path.exists(store_dir):
-        return spark.createDataFrame([], full)
-    return (
-        spark.read.schema(full)
-        .option("basePath", store_dir)
-        .parquet(f"{store_dir}/batch_id=*")
-    )
-
-
 def _monitor_log(spark: SparkSession, log_dir: str, schema: str) -> DataFrame:
-    """Shared append-only evaluation-log reader (see _read_store_deltas),
+    """Shared append-only evaluation-log reader (see store.read_deltas),
     ordered by batch then any key columns."""
-    cols = [c.split()[0] for c in schema.split(", ")]
-    return _read_store_deltas(spark, log_dir, schema).select(
+    cols = _cols(schema)
+    return read_deltas(spark, log_dir, schema).select(
         "batch_id", *cols
     ).orderBy("batch_id", *[c for c in cols if c in ("key", "source")])
 
@@ -999,21 +979,21 @@ def drift_monitor_log(spark: SparkSession, store_dir: str) -> DataFrame:
     )
 
 
-def _volume_ingest(batch: DataFrame, batch_id: int, store_dir: str) -> None:
+def _volume_ingest(batch: DataFrame, batch_id: int, store_dir: str) -> int:
     """One micro-batch of the volume store (see run_stream_volume_counts):
     stage per-(source, lang) additive partials under batch_id=N (remapped
-    above the compaction floor — see _effective_batch_id)."""
-    eff_id = _effective_batch_id(store_dir, batch_id, flat=True)
-    (
-        batch.groupBy("source", "lang")
-        .agg(
+    above the compaction floor — see store.stage_id); returns N."""
+    eff_id = stage_id(store_dir, batch_id)
+    write_delta(
+        batch.groupBy("source", "lang").agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_toks").cast("bigint").alias("n_tokens"),
             F.sum("n_chars").cast("bigint").alias("n_chars"),
-        )
-        .write.mode("overwrite")
-        .parquet(os.path.join(store_dir, f"batch_id={eff_id}"))
+        ),
+        store_dir,
+        eff_id,
     )
+    return eff_id
 
 
 def run_stream_volume_counts(
@@ -1080,7 +1060,7 @@ def run_stream_volume_monitor(
     sources) additive-log rows until compaction of counts; the log itself
     is the monitor's state, the q165 EWMA-carry idiom). Both writes stage
     under the same effective batch id (compaction-floor remapped, see
-    _effective_batch_id) — replay idempotent: a replayed batch overwrites
+    store.stage_id) — replay idempotent: a replayed batch overwrites
     its own counts delta AND its own log rows, and its streak was derived
     from strictly earlier log rows only."""
     counts_dir = os.path.join(store_dir, "counts")
@@ -1090,10 +1070,9 @@ def run_stream_volume_monitor(
         from ..functions import text as X
 
         spark = batch.sparkSession
-        eff_id = _effective_batch_id(counts_dir, batch_id, flat=True)
         # raw documents schema in (the run_stream_ingest_suite contract);
         # token counts derived once per batch, same as the suite
-        _volume_ingest(
+        eff_id = _volume_ingest(
             batch.select(
                 "source",
                 "lang",
@@ -1105,12 +1084,7 @@ def run_stream_volume_monitor(
         )
         # this batch's per-source totals from its own just-staged partials
         own = (
-            _read_store_deltas(
-                spark,
-                counts_dir,
-                "source string, lang string, n_docs bigint, n_tokens bigint, "
-                "n_chars bigint",
-            )
+            read_deltas(spark, counts_dir, _VOLUME_SCHEMA)
             .where(F.col("batch_id") == eff_id)
             .groupBy("source")
             .agg(F.sum("n_docs").cast("bigint").alias("n_docs"))
@@ -1119,7 +1093,7 @@ def run_stream_volume_monitor(
         total = own.agg(F.sum("n_docs").alias("__total"))
         # latest streak per source from strictly earlier log rows
         prev = (
-            _read_store_deltas(spark, log_dir, _VOLUME_MONITOR_LOG_SCHEMA)
+            read_deltas(spark, log_dir, _VOLUME_MONITOR_LOG_SCHEMA)
             .where(F.col("batch_id") < eff_id)
             .groupBy("source")
             .agg(F.max_by("quiet_streak", "batch_id").alias("prev_streak"))
@@ -1149,9 +1123,7 @@ def run_stream_volume_monitor(
                 "source", "n_docs", "share", "quiet", "quiet_streak", "alert"
             )
         )
-        out.write.mode("overwrite").parquet(
-            os.path.join(log_dir, f"batch_id={eff_id}")
-        )
+        write_delta(out, log_dir, eff_id)
 
     _run_foreach_batch(
         docs, monitor, checkpoint_dir, timeout_sec, "run_stream_volume_monitor"
@@ -1182,22 +1154,14 @@ def report_card_from_store(
     whoever arrives first, each member of a multi-copy group is counted
     exactly once for its own source — so the fold equals batch q157 under
     any arrival order, not just id-ordered drops (pytest pins both)."""
-    vol = _read_store_deltas(
-        spark,
-        vol_store_dir,
-        "source string, lang string, n_docs bigint, n_tokens bigint, n_chars bigint",
-    )
+    vol = read_deltas(spark, vol_store_dir, _VOLUME_SCHEMA)
     agg = vol.groupBy("source").agg(
         F.sum("n_docs").cast("bigint").alias("n_docs"),
         F.sum("n_tokens").cast("bigint").alias("n_tokens"),
         F.sum("n_chars").cast("bigint").alias("sum_chars"),
         F.countDistinct("lang").alias("n_langs"),
     )
-    edges = _read_store_deltas(
-        spark,
-        os.path.join(flow_store_dir, "edges"),
-        "fp string, keeper_source string, dup_source string, n_docs bigint",
-    )
+    edges = read_deltas(spark, os.path.join(flow_store_dir, "edges"), _EDGES_SCHEMA)
     dup_side = edges.groupBy(F.col("dup_source").alias("source")).agg(
         F.sum("n_docs").cast("bigint").alias("n_dup")
     )
@@ -1251,12 +1215,7 @@ def dedup_adjusted_budget_from_store(
     if budget_tokens is None:
         from ..plans.curation import _BUDGET_TOKENS as budget_tokens
     raw = (
-        _read_store_deltas(
-            spark,
-            vol_store_dir,
-            "source string, lang string, n_docs bigint, n_tokens bigint, "
-            "n_chars bigint",
-        )
+        read_deltas(spark, vol_store_dir, _VOLUME_SCHEMA)
         .groupBy("source")
         .agg(
             F.sum("n_docs").cast("bigint").alias("n_docs"),
@@ -1264,7 +1223,7 @@ def dedup_adjusted_budget_from_store(
         )
     )
     eff = (
-        _read_store_deltas(spark, kept_store_dir, _KEPT_SCHEMA)
+        read_deltas(spark, kept_store_dir, _KEPT_SCHEMA)
         .groupBy("source")
         .agg(F.sum("kept_tokens").cast("bigint").alias("eff_tokens"))
     )
@@ -1277,21 +1236,11 @@ def dedup_adjusted_budget_from_store(
 def compact_kept_store(spark: SparkSession, store_dir: str) -> None:
     """Compact the kept-mass store: per-source kept docs/tokens are
     additive (each fp group's keeper is staged exactly once across the
-    stream — additive ⇒ the section contract's one-batch double-count
+    stream — additive ⇒ the store.py contract's one-batch double-count
     caveat applies to an uncommitted delta compacted outside the
     maintenance window). dedup_adjusted_budget_from_store reads
     identically before and after."""
-    floor = _compact_partitioned(
-        spark,
-        store_dir,
-        _KEPT_SCHEMA,
-        lambda df: df.groupBy("source").agg(
-            F.sum("kept_docs").alias("kept_docs"),
-            F.sum("kept_tokens").alias("kept_tokens"),
-        ),
-    )
-    if floor is not None:
-        _write_compaction_floor(store_dir, floor)
+    compact(spark, store_dir, {"": _merge(_KEPT_SCHEMA, ("source",))})
 
 
 def run_stream_ingest_suite(
@@ -1419,10 +1368,8 @@ def _scorecard_ingest(
     from ..operators.multimodal import attach_media_mix
 
     nn = batch.filter(F.col("text").isNotNull())
-    eff_f = _effective_batch_id(fert_dir, batch_id, flat=True)
-    (
-        nn.groupBy("source")
-        .agg(
+    write_delta(
+        nn.groupBy("source").agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
             F.sum(F.length(X.normalize(F.col("text"))).cast("bigint"))
             .cast("bigint")
@@ -1431,15 +1378,14 @@ def _scorecard_ingest(
             # size(tokens) on non-null text) — reuse its n_toks column
             # instead of a second tokenize pass
             F.sum("n_toks").cast("bigint").alias("n_words"),
-        )
-        .write.mode("overwrite")
-        .parquet(os.path.join(fert_dir, f"batch_id={eff_f}"))
+        ),
+        fert_dir,
+        stage_id(fert_dir, batch_id),
     )
     _decode_health_ingest(
         attach_media_mix(batch.select("doc_id", "source")), batch_id, health_dir
     )
-    eff_s = _effective_batch_id(sh_dir, batch_id, flat=True)
-    (
+    write_delta(
         nn.select(
             "source",
             F.explode_outer(
@@ -1447,9 +1393,9 @@ def _scorecard_ingest(
             ).alias("s"),
         )
         .groupBy(F.xxhash64("s").alias("sh"), "source")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-        .write.mode("overwrite")
-        .parquet(os.path.join(sh_dir, f"batch_id={eff_s}"))
+        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt")),
+        sh_dir,
+        stage_id(sh_dir, batch_id),
     )
 
 
@@ -1475,7 +1421,7 @@ def curation_scorecard_from_stores(spark: SparkSession, root_dir: str) -> DataFr
         spark, os.path.join(root_dir, "volume"), os.path.join(root_dir, "flow")
     ).select("source", "n_docs", "n_tokens", "dup_rate")
     fert = (
-        _read_store_deltas(spark, os.path.join(root_dir, "fert"), _FERT_SCHEMA)
+        read_deltas(spark, os.path.join(root_dir, "fert"), _FERT_SCHEMA)
         .groupBy("source")
         .agg(
             (
@@ -1483,7 +1429,7 @@ def curation_scorecard_from_stores(spark: SparkSession, root_dir: str) -> DataFr
             ).alias("chars_per_word")
         )
     )
-    health = _read_store_deltas(
+    health = read_deltas(
         spark, os.path.join(root_dir, "health"), _HEALTH_COUNT_SCHEMA
     )
     med = health.groupBy("source").agg(
@@ -1494,7 +1440,7 @@ def curation_scorecard_from_stores(spark: SparkSession, root_dir: str) -> DataFr
         ).alias("malformed_share")
     )
     sh = (
-        _read_store_deltas(spark, os.path.join(root_dir, "shingles"), _SHINGLE_SCHEMA)
+        read_deltas(spark, os.path.join(root_dir, "shingles"), _SHINGLE_SCHEMA)
         .groupBy("sh", "source")
         .agg(F.sum("cnt").alias("cnt"))
     )
@@ -1521,21 +1467,10 @@ def curation_scorecard_from_stores(spark: SparkSession, root_dir: str) -> DataFr
 def compact_fert_store(spark: SparkSession, store_dir: str) -> None:
     """Compact the fertility store: per-source sums are additive;
     curation_scorecard_from_stores reads identically before and after.
-    Additive ⇒ the section contract's one-batch double-count caveat
+    Additive ⇒ the store.py contract's one-batch double-count caveat
     applies to an uncommitted delta compacted outside the maintenance
     window."""
-    floor = _compact_partitioned(
-        spark,
-        store_dir,
-        _FERT_SCHEMA,
-        lambda df: df.groupBy("source").agg(
-            F.sum("n_docs").alias("n_docs"),
-            F.sum("norm_chars").alias("norm_chars"),
-            F.sum("n_words").alias("n_words"),
-        ),
-    )
-    if floor is not None:
-        _write_compaction_floor(store_dir, floor)
+    compact(spark, store_dir, {"": _merge(_FERT_SCHEMA, ("source",))})
 
 
 def compact_shingle_store(spark: SparkSession, store_dir: str) -> None:
@@ -1544,14 +1479,7 @@ def compact_shingle_store(spark: SparkSession, store_dir: str) -> None:
     and after. This is the store that earns compaction: its deltas grow
     with distinct shingles per batch, and the fold collapses every
     shingle's history to one row."""
-    floor = _compact_partitioned(
-        spark,
-        store_dir,
-        _SHINGLE_SCHEMA,
-        lambda df: df.groupBy("sh", "source").agg(F.sum("cnt").alias("cnt")),
-    )
-    if floor is not None:
-        _write_compaction_floor(store_dir, floor)
+    compact(spark, store_dir, {"": _merge(_SHINGLE_SCHEMA, ("sh", "source"))})
 
 
 _SCORECARD_LOG_SCHEMA = (
@@ -1609,20 +1537,19 @@ def run_stream_scorecard_monitor(
             _scorecard_ingest(enriched, batch_id, fert_dir, health_dir, sh_dir)
         finally:
             enriched.unpersist()
-        eff_id = _effective_batch_id(log_dir, batch_id, flat=True)
+        eff_id = stage_id(log_dir, batch_id)
         sc = curation_scorecard_from_stores(spark, root_dir).select(
             "source", "n_flags", "recommendation", _rec_rank().alias("rk")
         )
         prev = (
-            _read_store_deltas(spark, log_dir, _SCORECARD_LOG_SCHEMA)
+            read_deltas(spark, log_dir, _SCORECARD_LOG_SCHEMA)
             .where(F.col("batch_id") < eff_id)
             .groupBy("source")
             .agg(F.max_by("recommendation", "batch_id").alias("recommendation"))
             .select("source", _rec_rank().alias("prev_rk"))
         )
-        (
-            sc.join(prev, "source", "left")
-            .select(
+        write_delta(
+            sc.join(prev, "source", "left").select(
                 "source",
                 "n_flags",
                 "recommendation",
@@ -1630,9 +1557,9 @@ def run_stream_scorecard_monitor(
                 (F.col("rk") > F.coalesce(F.col("prev_rk"), F.col("rk"))).alias(
                     "degraded"
                 ),
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(log_dir, f"batch_id={eff_id}"))
+            ),
+            log_dir,
+            eff_id,
         )
 
     _run_foreach_batch(
@@ -1672,7 +1599,7 @@ def run_stream_psi_counts_by_key(
     def bin_counts(batch: DataFrame, batch_id: int) -> None:
         _stage_bin_counts(
             binner(batch),
-            _effective_batch_id(store_dir, batch_id, flat=True),
+            stage_id(store_dir, batch_id),
             store_dir,
             ["key"],
         )
@@ -1789,8 +1716,7 @@ def _lsh_dedup_ingest(
 
     spark = batch.sparkSession
     state_dir = os.path.join(store_dir, "state")
-    _recover_compaction(os.path.join(store_dir, "pairs"))  # heal crashed compaction
-    eff_id = _effective_batch_id(store_dir, batch_id)
+    eff_id = stage_id(store_dir, batch_id, "state", "pairs")
     # null-shingle docs (null text) can never verify; drop like batch q36
     cur = (
         batch.select("doc_id", X.shingles(F.col("text"), 3).alias("sh"))
@@ -1798,7 +1724,7 @@ def _lsh_dedup_ingest(
         .withColumn("bands", F.array(*band_key_structs(F.col("sh"))))
     )
     state = (
-        _read_store_deltas(spark, state_dir, _LSH_STATE_SCHEMA)
+        read_deltas(spark, state_dir, _LSH_STATE_SCHEMA)
         .where(F.col("batch_id") < eff_id)
         .drop("batch_id")
     )
@@ -1851,11 +1777,8 @@ def _lsh_dedup_ingest(
         .select("doc_a", "doc_b", (common.cast("double") / union).alias("jac"))
         .filter(F.col("jac") >= _JACCARD_T)
     )
-    pairs_delta = os.path.join(store_dir, "pairs", f"batch_id={eff_id}")
-    pairs.write.mode("overwrite").parquet(pairs_delta)
-    cur.select("doc_id", "sh", "bands").write.mode("overwrite").parquet(
-        os.path.join(state_dir, f"batch_id={eff_id}")
-    )
+    pairs_delta = write_delta(pairs, os.path.join(store_dir, "pairs"), eff_id)
+    write_delta(cur.select("doc_id", "sh", "bands"), state_dir, eff_id)
     if labels_dir is not None:
         # near-dup cluster-label maintenance (round 11): the batch must
         # carry (source, n_toks). Pairs are read BACK from the staged
@@ -1916,7 +1839,7 @@ def near_dup_pairs_from_store(spark: SparkSession, store_dir: str) -> DataFrame:
     """Batch q36's (doc_a, doc_b, jac) folded from the LSH ingest store —
     reads only the pair deltas (linear in near-dups), never the corpus."""
     return (
-        _read_store_deltas(spark, os.path.join(store_dir, "pairs"), _LSH_PAIRS_SCHEMA)
+        read_deltas(spark, os.path.join(store_dir, "pairs"), _LSH_PAIRS_SCHEMA)
         .select("doc_a", "doc_b", "jac")
         .orderBy("doc_a", "doc_b")
     )
@@ -1960,9 +1883,9 @@ def _near_dup_label_ingest(
     batch COMPLETED (from the LSH ingest's staged delta — both docs in
     this batch, or one here and one stored)."""
     spark = meta.sparkSession
-    eff_id = _effective_batch_id(labels_dir, batch_id, flat=True)
+    eff_id = stage_id(labels_dir, batch_id)
     prior_rows = (
-        _read_store_deltas(spark, labels_dir, _ND_LABELS_SCHEMA)
+        read_deltas(spark, labels_dir, _ND_LABELS_SCHEMA)
         .where(F.col("batch_id") < eff_id)
         .drop("batch_id")
     )
@@ -1980,9 +1903,7 @@ def _near_dup_label_ingest(
     )
     all_rows = prior_rows.unionByName(new_docs)
     if pairs.isEmpty():
-        new_docs.write.mode("overwrite").parquet(
-            os.path.join(labels_dir, f"batch_id={eff_id}")
-        )
+        write_delta(new_docs, labels_dir, eff_id)
         return
     # current labels of the pairs' endpoints (tiny set): min over a doc's
     # staged rows IS its current label
@@ -2009,9 +1930,7 @@ def _near_dup_label_ingest(
     if label_edges.isEmpty():
         # every pair lies within an existing cluster — no merges; the
         # steady-state fast path once clusters have formed
-        new_docs.write.mode("overwrite").parquet(
-            os.path.join(labels_dir, f"batch_id={eff_id}")
-        )
+        write_delta(new_docs, labels_dir, eff_id)
         return
     verts = (
         label_edges.select(F.col("src").alias("id"))
@@ -2028,9 +1947,7 @@ def _near_dup_label_ingest(
         all_rows.join(F.broadcast(remap), all_rows["label"] == remap["id"])
         .select("doc_id", "source", "nt", F.col("component").alias("label"))
     )
-    new_docs.unionByName(changed).write.mode("overwrite").parquet(
-        os.path.join(labels_dir, f"batch_id={eff_id}")
-    )
+    write_delta(new_docs.unionByName(changed), labels_dir, eff_id)
 
 
 def run_stream_neardup_ingest_suite(
@@ -2086,7 +2003,7 @@ def dedup_adjusted_budget_from_labels_store(
     from ..plans.curation import budget_plan_columns
 
     cur = (
-        _read_store_deltas(spark, labels_dir, _ND_LABELS_SCHEMA)
+        read_deltas(spark, labels_dir, _ND_LABELS_SCHEMA)
         .groupBy("doc_id")
         .agg(
             F.min("label").alias("label"),
@@ -2121,7 +2038,7 @@ def cluster_sizes_from_labels_store(
     from ..plans.dedup import cluster_size_distribution
 
     cur = (
-        _read_store_deltas(spark, labels_dir, _ND_LABELS_SCHEMA)
+        read_deltas(spark, labels_dir, _ND_LABELS_SCHEMA)
         .groupBy("doc_id")
         .agg(F.min("label").alias("label"))
     )
@@ -2133,191 +2050,15 @@ def compact_near_dup_labels_store(spark: SparkSession, labels_dir: str) -> None:
     (min) label. The fold is idempotent min/max, so compaction is exact
     under any schedule; the floor marker keeps later ingest ids above the
     folded delta like every flat store."""
-    floor = _compact_partitioned(
-        spark,
-        labels_dir,
-        _ND_LABELS_SCHEMA,
-        lambda df: df.groupBy("doc_id").agg(
+
+    def merge(df: DataFrame) -> DataFrame:
+        return df.groupBy("doc_id").agg(
             F.max("source").alias("source"),
             F.max("nt").alias("nt"),
             F.min("label").alias("label"),
-        ).select("doc_id", "source", "nt", "label"),
-    )
-    if floor is not None:
-        _write_compaction_floor(labels_dir, floor)
+        )
 
-
-# ---------------------------------------------------------------------------
-# Store compaction: the maintenance half of the staged-delta contract.
-# Every foreachBatch store above appends one batch_id=N delta per
-# micro-batch, so store reads (keeper lookups, PSI folds) grow linearly
-# with batch COUNT even when the folded state is tiny. Compaction merges
-# all deltas into a single batch_id=0 delta with the identical fold.
-#
-# CONTRACT: run only while no stream is writing the store AND the last
-# drain completed (all batches committed). A replayed batch overwrites
-# its own batch_id dir; compacting an uncommitted batch's delta into
-# batch_id=0 would double-count it on replay, and the dup-flow keeper
-# lookup's `batch_id < N` filter would see batch N's own compacted
-# keepers. Between availableNow drains — the natural maintenance window
-# — both hazards are impossible.
-#
-# BOUNDED DOUBLE-COUNT CAVEAT (ADVICE r9): the floor remap trades replay
-# idempotence for history safety on exactly ONE pathological schedule —
-# an uncommitted batch whose delta was compacted anyway (a violation of
-# the window contract above: crash between the delta write and the
-# checkpoint commit, compaction run before the stream resumes). The
-# replayed raw id then lands ABOVE the floor instead of overwriting its
-# own (now folded) delta, so ADDITIVE stores (counts/volume/basket/
-# attribution-revenue/revenue-partials/decode-health/dup-flow edges)
-# count that one batch twice; latest-wins folds (CDC) and unique-row
-# folds (LSH state) are unchanged. The dup-flow SELF-edge this schedule
-# could once manufacture (the replayed keeper counted as a dup of
-# itself) is gone since round 11: the keeper store records
-# keeper_doc_id and the ingest drops any dup row whose doc IS the
-# stored keeper (VERDICT r10 item 7) — only the bounded edge
-# double-count remains.
-# The alternative — skipping raw ids at-or-below a folded high-water mark
-# — cannot distinguish this replay from a fresh-checkpoint restart (both
-# re-present low raw ids) without introspecting the engine's checkpoint,
-# and would silently DROP data on the restart path; a bounded duplicate
-# of one batch is the better failure. Honoring the maintenance-window
-# contract makes the schedule impossible in the first place.
-# ---------------------------------------------------------------------------
-
-
-_FLOOR_MARKER = "_compaction_floor"
-
-
-def _floor_marker_path(store_dir: str) -> str:
-    """Where a store's compaction-floor marker lives: INSIDE the store
-    directory, for every store shape (ADVICE r9). Two-level stores keep it
-    in the stable parent beside the swapped subdirs; flat stores keep it
-    beside their ``batch_id=*`` partition dirs — the leading underscore
-    makes Spark's parquet reader skip it, and _compact_partitioned copies
-    it into the rebuilt directory BEFORE the rename-rename swap, so the
-    marker always travels with the store (a directory-level copy, move,
-    or backup can no longer detach the floor from the data it protects)."""
-    return os.path.join(store_dir, _FLOOR_MARKER)
-
-
-def _read_compaction_floor(store_dir: str, flat: bool = False) -> int | None:
-    """The highest batch_id folded by the last compaction (None before the
-    first compaction). Written by every compact_*_store; once present,
-    ingests remap EVERY batch id above it (see _effective_batch_id).
-    ``flat`` additionally checks the pre-r10 sibling location
-    (``<store>._compaction_floor``) so stores written by earlier rounds
-    keep their floor."""
-    try:
-        with open(_floor_marker_path(store_dir)) as f:
-            return int(f.read().strip())
-    except (OSError, ValueError):
-        pass
-    if flat:
-        try:
-            with open(store_dir.rstrip(os.sep) + "." + _FLOOR_MARKER) as f:
-                return int(f.read().strip())
-        except (OSError, ValueError):
-            pass
-    return None
-
-
-def _write_compaction_floor(store_dir: str, floor: int) -> None:
-    path = _floor_marker_path(store_dir)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(floor))
-    os.replace(tmp, path)
-
-
-def _effective_batch_id(store_dir: str, batch_id: int, flat: bool = False) -> int:
-    """Remap a raw micro-batch id above the store's compaction floor
-    (ADVICE r6/r7, generalized to every compactable store in ADVICE r8):
-    compaction folds history into the MAX existing batch_id, so a replay
-    of that raw id — crash between the delta write and the checkpoint
-    commit with a compaction run before the stream resumes, or a
-    fresh-checkpoint restart whose ids begin again at 0 — would otherwise
-    mode('overwrite') the single folded delta and silently destroy all
-    prior history. Once a floor exists, EVERY raw id maps to
-    floor+1+raw_id: injective and strictly monotone, so replayed and
-    continuing batches can never collide with each other or with the
-    compacted delta. Before the first compaction this is the identity.
-
-    Flat stores are also HEALED here (round-9 hardening): a compaction
-    that died between its two renames leaves the live dir missing with
-    `.old` holding all history; an ingest that recreated the live dir
-    would make the next _recover_compaction delete the backup — silent
-    history loss. Healing before the first post-crash write closes the
-    stream-resumes-before-any-fold window. Two-level stores heal their
-    swapped SUBDIRS at their own ingest sites (the marker parent is never
-    swapped)."""
-    if flat:
-        _recover_compaction(store_dir)
-    floor = _read_compaction_floor(store_dir, flat=flat)
-    return batch_id if floor is None else floor + 1 + batch_id
-
-
-def _recover_compaction(store_dir: str) -> None:
-    """Heal a compaction interrupted between its two renames: if the live
-    name is missing but the `.old` backup exists, restore the backup (and
-    drop the half-promoted build). Called by _compact_partitioned and by
-    every store fold, so a crashed compaction can never read as an empty
-    store — at worst the next compaction redoes the merge."""
-    import shutil
-
-    old = store_dir + ".old"
-    if os.path.exists(store_dir):
-        if os.path.exists(old):  # completed swap, stale backup
-            shutil.rmtree(old, ignore_errors=True)
-    elif os.path.exists(old):
-        os.rename(old, store_dir)
-        shutil.rmtree(store_dir + ".compacting", ignore_errors=True)
-
-
-def _compact_partitioned(
-    spark: SparkSession, store_dir: str, schema: str, merge
-) -> int | None:
-    """Read every batch_id delta with the declared schema, merge, swap the
-    store for a single-delta copy living at the MAX existing batch_id —
-    not 0, so a stream mistakenly restarted on a FRESH checkpoint (ids
-    restart at 0) overwrites at most an empty low-id delta instead of the
-    whole compacted history. The swap is rename-rename with a `.old`
-    backup; a crash between the renames is healed by _recover_compaction
-    (run this in the maintenance window — no concurrent readers/writers)."""
-    import re
-    import shutil
-
-    _recover_compaction(store_dir)
-    if not os.path.exists(store_dir):
-        return None
-    ids = [
-        int(m.group(1))
-        for d in os.listdir(store_dir)
-        if (m := re.match(r"batch_id=(\d+)$", d))
-    ]
-    target = max(ids) if ids else 0
-    df = (
-        spark.read.schema(schema)
-        .option("basePath", store_dir)
-        .parquet(f"{store_dir}/batch_id=*")
-    )
-    merged = merge(df)
-    tmp = store_dir + ".compacting"
-    shutil.rmtree(tmp, ignore_errors=True)
-    merged.write.mode("overwrite").parquet(os.path.join(tmp, f"batch_id={target}"))
-    # carry the floor marker into the rebuilt dir BEFORE the swap: a crash
-    # between the swap and the caller's _write_compaction_floor must leave
-    # the previous floor in place, never strip it (an unfloored store would
-    # let a folded-id replay overwrite the compacted delta).
-    marker = _floor_marker_path(store_dir)
-    if os.path.exists(marker):
-        shutil.copyfile(marker, _floor_marker_path(tmp))
-    old = store_dir + ".old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(store_dir, old)
-    os.rename(tmp, store_dir)
-    shutil.rmtree(old, ignore_errors=True)
-    return target
+    compact(spark, labels_dir, {"": (_ND_LABELS_SCHEMA, merge)})
 
 
 def compact_counts_store(
@@ -2326,36 +2067,18 @@ def compact_counts_store(
     """Compact a (keyed or unkeyed) PSI bin-counts store: additive counts
     merge by summation; psi(_by_key)_from_store reads identically before
     and after (pytest-pinned). Additive ⇒ subject to the one-batch
-    double-count caveat in the section contract above if an uncommitted
+    double-count caveat in the store.py contract if an uncommitted
     delta is compacted outside the maintenance window."""
     keys = list(key_cols or [])
-    floor = _compact_partitioned(
-        spark,
-        store_dir,
-        _counts_read_schema(keys),
-        lambda df: df.groupBy(*keys, "bin").agg(F.sum("n").alias("n")),
-    )
-    if floor is not None:
-        _write_compaction_floor(store_dir, floor)
+    compact(spark, store_dir, {"": _merge(_counts_read_schema(keys), (*keys, "bin"))})
 
 
 def compact_volume_store(spark: SparkSession, store_dir: str) -> None:
     """Compact the report-card volume store: all five measures are
     additive per (source, lang) cell — additive ⇒ the one-batch
-    double-count caveat (section contract above) applies to an
+    double-count caveat (store.py contract) applies to an
     uncommitted delta compacted outside the maintenance window."""
-    floor = _compact_partitioned(
-        spark,
-        store_dir,
-        "source string, lang string, n_docs bigint, n_tokens bigint, n_chars bigint",
-        lambda df: df.groupBy("source", "lang").agg(
-            F.sum("n_docs").alias("n_docs"),
-            F.sum("n_tokens").alias("n_tokens"),
-            F.sum("n_chars").alias("n_chars"),
-        ),
-    )
-    if floor is not None:
-        _write_compaction_floor(store_dir, floor)
+    compact(spark, store_dir, {"": _merge(_VOLUME_SCHEMA, ("source", "lang"))})
 
 
 def compact_dup_flow_store(spark: SparkSession, store_dir: str) -> None:
@@ -2364,29 +2087,20 @@ def compact_dup_flow_store(spark: SparkSession, store_dir: str) -> None:
     deltas by construction, so this is a plain rewrite), edges sum their
     n_docs per (fp, keeper_source, dup_source). Continued ingestion after
     compaction keeps working: the floor marker remaps every later ingest
-    id above the compacted delta (see _effective_batch_id), and the keeper
+    id above the compacted delta (see store.stage_id), and the keeper
     lookup's `batch_id < N` filter always includes it. Edge counts are
     additive ⇒ a folded-id replay (window-contract violation) double-counts
     that one batch's edges — but can no longer add self-edges (the
-    keeper_doc_id guard in _dup_flow_ingest); see the section contract's
+    keeper_doc_id guard in _dup_flow_ingest); see the store.py contract's
     bounded double-count caveat."""
-    k_floor = _compact_partitioned(
+    compact(
         spark,
-        os.path.join(store_dir, "keepers"),
-        "fp string, keeper_source string, keeper_doc_id long",
-        lambda df: df.select("fp", "keeper_source", "keeper_doc_id"),
+        store_dir,
+        {
+            "keepers": _merge(_KEEPERS_SCHEMA),
+            "edges": _merge(_EDGES_SCHEMA, ("fp", "keeper_source", "dup_source")),
+        },
     )
-    e_floor = _compact_partitioned(
-        spark,
-        os.path.join(store_dir, "edges"),
-        "fp string, keeper_source string, dup_source string, n_docs bigint",
-        lambda df: df.groupBy("fp", "keeper_source", "dup_source").agg(
-            F.sum("n_docs").alias("n_docs")
-        ),
-    )
-    floors = [f for f in (k_floor, e_floor) if f is not None]
-    if floors:
-        _write_compaction_floor(store_dir, max(floors))
 
 
 def compact_lsh_dedup_store(spark: SparkSession, store_dir: str) -> None:
@@ -2401,21 +2115,11 @@ def compact_lsh_dedup_store(spark: SparkSession, store_dir: str) -> None:
     _lsh_dedup_ingest), so neither a replay of a folded id nor a
     fresh-checkpoint restart can overwrite the compacted delta or another
     batch's delta (ADVICE r6/r7)."""
-    floor = _compact_partitioned(
+    compact(
         spark,
-        os.path.join(store_dir, "state"),
-        _LSH_STATE_SCHEMA,
-        lambda df: df.select("doc_id", "sh", "bands"),
+        store_dir,
+        {"state": _merge(_LSH_STATE_SCHEMA), "pairs": _merge(_LSH_PAIRS_SCHEMA)},
     )
-    pairs_floor = _compact_partitioned(
-        spark,
-        os.path.join(store_dir, "pairs"),
-        _LSH_PAIRS_SCHEMA,
-        lambda df: df.select("doc_a", "doc_b", "jac"),
-    )
-    floors = [f for f in (floor, pairs_floor) if f is not None]
-    if floors:
-        _write_compaction_floor(store_dir, max(floors))
 
 
 def run_stream_ks_monitor(
@@ -2453,20 +2157,20 @@ def run_stream_ks_monitor(
 
     def monitor(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        (
-            tdigest_partials(batch, key_col, value_col, delta)
-            .write.mode("overwrite")
-            .parquet(os.path.join(partials_dir, f"batch_id={batch_id}"))
+        write_delta(
+            tdigest_partials(batch, key_col, value_col, delta), partials_dir, batch_id
         )
         ks, n_cur = ks_from_digest_store(
             spark, partials_dir, ref_means, ref_weights, key=key, delta=delta
         )
         alert = bool(ks >= ks_alert) or n_cur == 0
-        spark.createDataFrame(
-            [(float(ks), int(n_cur), alert)],
-            "ks_stat double, n_cur bigint, alert boolean",
-        ).write.mode("overwrite").parquet(
-            os.path.join(log_dir, f"batch_id={batch_id}")
+        write_delta(
+            spark.createDataFrame(
+                [(float(ks), int(n_cur), alert)],
+                "ks_stat double, n_cur bigint, alert boolean",
+            ),
+            log_dir,
+            batch_id,
         )
 
     _run_foreach_batch(
@@ -2515,12 +2219,7 @@ def run_stream_cdc_ops(
     from ..plans.cdc import latest_cdc_ops
 
     def ingest(batch: DataFrame, batch_id: int) -> None:
-        latest_cdc_ops(batch).write.mode("overwrite").parquet(
-            os.path.join(
-                store_dir,
-                f"batch_id={_effective_batch_id(store_dir, batch_id, flat=True)}",
-            )
-        )
+        write_delta(latest_cdc_ops(batch), store_dir, stage_id(store_dir, batch_id))
 
     _run_foreach_batch(ops, ingest, checkpoint_dir, timeout_sec, "run_stream_cdc_ops")
 
@@ -2528,7 +2227,7 @@ def run_stream_cdc_ops(
 def _cdc_store_latest(spark: SparkSession, store_dir: str) -> DataFrame:
     from ..plans.cdc import CDC_OPS_SCHEMA, latest_cdc_ops
 
-    return latest_cdc_ops(_read_store_deltas(spark, store_dir, CDC_OPS_SCHEMA))
+    return latest_cdc_ops(read_deltas(spark, store_dir, CDC_OPS_SCHEMA))
 
 
 def cdc_snapshot_from_store(
@@ -2553,9 +2252,7 @@ def compact_cdc_store(spark: SparkSession, store_dir: str) -> None:
     (new ids land above the checkpoint's high-water mark)."""
     from ..plans.cdc import CDC_OPS_SCHEMA, latest_cdc_ops
 
-    floor = _compact_partitioned(spark, store_dir, CDC_OPS_SCHEMA, latest_cdc_ops)
-    if floor is not None:
-        _write_compaction_floor(store_dir, floor)
+    compact(spark, store_dir, {"": (CDC_OPS_SCHEMA, latest_cdc_ops)})
 
 
 # ---------------------------------------------------------------------------
@@ -2583,6 +2280,10 @@ def compact_cdc_store(spark: SparkSession, store_dir: str) -> None:
 # ---------------------------------------------------------------------------
 
 
+_CLICKS_SCHEMA = "user_id bigint, click_key decimal(38,0)"
+_REVENUE_SCHEMA = "campaign bigint, n_purchases bigint, rev_units bigint"
+
+
 def _attribution_ingest(batch: DataFrame, batch_id: int, store_dir: str) -> None:
     from ..plans.customer import (
         ATTR_WINDOW_US,
@@ -2592,12 +2293,7 @@ def _attribution_ingest(batch: DataFrame, batch_id: int, store_dir: str) -> None
 
     spark = batch.sparkSession
     clicks_dir = os.path.join(store_dir, "clicks")
-    # heal a crashed compaction, then remap above the floor (see
-    # _effective_batch_id): a replay of a folded raw id must never
-    # overwrite the compacted clicks/revenue
-    _recover_compaction(clicks_dir)
-    _recover_compaction(os.path.join(store_dir, "revenue"))
-    eff_id = _effective_batch_id(store_dir, batch_id)
+    eff_id = stage_id(store_dir, batch_id, "clicks", "revenue")
     ts_us = epoch_us(F.col("ts"))
     ck = F.when(
         F.col("event_type") == "click",
@@ -2621,10 +2317,12 @@ def _attribution_ingest(batch: DataFrame, batch_id: int, store_dir: str) -> None
     # cached: consumed by the clicks write AND the purchase attribution
     wb = enriched.withColumn("batch_best", F.max("click_key").over(fr)).cache()
     try:
-        wb.where(F.col("click_key").isNotNull()).groupBy("user_id").agg(
-            F.max("click_key").alias("click_key")
-        ).write.mode("overwrite").parquet(
-            os.path.join(clicks_dir, f"batch_id={eff_id}")
+        write_delta(
+            wb.where(F.col("click_key").isNotNull())
+            .groupBy("user_id")
+            .agg(F.max("click_key").alias("click_key")),
+            clicks_dir,
+            eff_id,
         )
 
         purch = wb.where(F.col("event_type") == "purchase").select(
@@ -2634,9 +2332,7 @@ def _attribution_ingest(batch: DataFrame, batch_id: int, store_dir: str) -> None
         # first-ever batch — left-joins to null store_best, the same
         # no-store contract the old else branch hand-built)
         prior = (
-            _read_store_deltas(
-                spark, clicks_dir, "user_id bigint, click_key decimal(38,0)"
-            )
+            read_deltas(spark, clicks_dir, _CLICKS_SCHEMA)
             .where(F.col("batch_id") < eff_id)
             .select("user_id", F.col("click_key").alias("store_key"))
         )
@@ -2666,9 +2362,7 @@ def _attribution_ingest(batch: DataFrame, batch_id: int, store_dir: str) -> None
                 ),
             )
         )
-        out.write.mode("overwrite").parquet(
-            os.path.join(store_dir, "revenue", f"batch_id={eff_id}")
-        )
+        write_delta(out, os.path.join(store_dir, "revenue"), eff_id)
     finally:
         wb.unpersist()
 
@@ -2700,11 +2394,7 @@ def attribution_from_store(spark: SparkSession, store_dir: str) -> DataFrame:
     batch query bit-for-bit."""
     from decimal import Decimal
 
-    rows = _read_store_deltas(
-        spark,
-        os.path.join(store_dir, "revenue"),
-        "campaign bigint, n_purchases bigint, rev_units bigint",
-    )
+    rows = read_deltas(spark, os.path.join(store_dir, "revenue"), _REVENUE_SCHEMA)
     return (
         rows.groupBy("campaign")
         .agg(
@@ -2756,14 +2446,14 @@ def _daily_units(batch: DataFrame):
     )
 
 
+_DAY_PARTIALS_SCHEMA = "day_idx int, u_partial bigint"
+_REVENUE_LOG_SCHEMA = "n_anomalies bigint, max_abs_z double, max_z_day bigint"
+
+
 def _fold_daily_series(spark: SparkSession, partials_dir: str) -> DataFrame:
     from decimal import Decimal
 
-    rows = (
-        spark.read.schema("day_idx int, u_partial bigint, batch_id bigint")
-        .option("basePath", partials_dir)
-        .parquet(f"{partials_dir}/batch_id=*")
-    )
+    rows = read_deltas(spark, partials_dir, _DAY_PARTIALS_SCHEMA)
     return rows.groupBy("day_idx").agg(
         (F.sum("u_partial").cast("decimal(38,0)") * F.lit(Decimal(1).scaleb(-4)))
         .cast("double")
@@ -2785,11 +2475,8 @@ def run_stream_revenue_monitor(
     def ingest(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         partials_dir = os.path.join(store_dir, "partials")
-        _recover_compaction(partials_dir)  # heal crashed compaction
-        batch_id = _effective_batch_id(store_dir, batch_id)
-        _daily_units(batch).write.mode("overwrite").parquet(
-            os.path.join(partials_dir, f"batch_id={batch_id}")
-        )
+        batch_id = stage_id(store_dir, batch_id, "partials")
+        write_delta(_daily_units(batch), partials_dir, batch_id)
         flagged = score_daily_anomalies(
             _fold_daily_series(spark, partials_dir)
         ).cache()
@@ -2797,18 +2484,20 @@ def run_stream_revenue_monitor(
             top = flagged.orderBy(F.abs(F.col("zscore")).desc(), "day_idx").limit(1)
             row = top.collect()
             n = flagged.count()
-            spark.createDataFrame(
-                [
-                    (
-                        batch_id,
-                        n,
-                        float(row[0].zscore) if row else None,
-                        int(row[0].day_idx) if row else None,
-                    )
-                ],
-                "batch_id bigint, n_anomalies bigint, max_abs_z double, max_z_day bigint",
-            ).write.mode("overwrite").parquet(
-                os.path.join(store_dir, "monitor", f"batch_id={batch_id}")
+            write_delta(
+                spark.createDataFrame(
+                    [
+                        (
+                            batch_id,
+                            n,
+                            float(row[0].zscore) if row else None,
+                            int(row[0].day_idx) if row else None,
+                        )
+                    ],
+                    "batch_id bigint, " + _REVENUE_LOG_SCHEMA,
+                ),
+                os.path.join(store_dir, "monitor"),
+                batch_id,
             )
         finally:
             flagged.unpersist()
@@ -2823,30 +2512,13 @@ def revenue_anomalies_from_store(spark: SparkSession, store_dir: str) -> DataFra
     equals batch q169 tuple-for-tuple under any batch split."""
     from ..plans.timeseries import score_daily_anomalies
 
-    partials_dir = os.path.join(store_dir, "partials")
-    if not os.path.exists(partials_dir):
-        return spark.createDataFrame(
-            [],
-            "day_idx bigint, revenue double, n_prior bigint, "
-            "mean_28 double, sd_28 double, zscore double",
-        )
-    return score_daily_anomalies(_fold_daily_series(spark, partials_dir))
+    return score_daily_anomalies(
+        _fold_daily_series(spark, os.path.join(store_dir, "partials"))
+    )
 
 
 def revenue_monitor_log(spark: SparkSession, store_dir: str) -> DataFrame:
-    mon_dir = os.path.join(store_dir, "monitor")
-    if not os.path.exists(mon_dir):
-        return spark.createDataFrame(
-            [], "batch_id bigint, n_anomalies bigint, max_abs_z double, max_z_day bigint"
-        )
-    return (
-        spark.read.schema(
-            "batch_id bigint, n_anomalies bigint, max_abs_z double, max_z_day bigint"
-        )
-        .option("basePath", mon_dir)
-        .parquet(f"{mon_dir}/batch_id=*")
-        .orderBy("batch_id")
-    )
+    return _monitor_log(spark, os.path.join(store_dir, "monitor"), _REVENUE_LOG_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -2867,6 +2539,15 @@ def revenue_monitor_log(spark: SparkSession, store_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+# each basket sub-store's schema and additive merge: the fold and the
+# compaction apply the same sums
+_BASKET_PARTS = {
+    "pairs": _merge("p1 bigint, p2 bigint, n_both bigint", ("p1", "p2")),
+    "items": _merge("p bigint, n_p bigint", ("p",)),
+    "baskets": _merge("n_orders bigint", ()),
+}
+
+
 def run_stream_basket_counts(
     lineitems: DataFrame,
     store_dir: str,
@@ -2877,9 +2558,7 @@ def run_stream_basket_counts(
     is a streaming frame with (l_orderkey, l_partkey)."""
 
     def ingest(batch: DataFrame, batch_id: int) -> None:
-        for sub in ("pairs", "items", "baskets"):  # heal crashed compaction
-            _recover_compaction(os.path.join(store_dir, sub))
-        batch_id = _effective_batch_id(store_dir, batch_id)
+        batch_id = stage_id(store_dir, batch_id, *_BASKET_PARTS)
         li = batch.select("l_orderkey", "l_partkey")
         a = li.select("l_orderkey", F.col("l_partkey").alias("p1"))
         b = li.select("l_orderkey", F.col("l_partkey").alias("p2"))
@@ -2892,18 +2571,12 @@ def run_stream_basket_counts(
                 .groupBy("p1", "p2")
                 .agg(F.countDistinct("l_orderkey").alias("n_both"))
             )
-            pairs.write.mode("overwrite").parquet(
-                os.path.join(store_dir, "pairs", f"batch_id={batch_id}")
-            )
             items = li.groupBy(F.col("l_partkey").alias("p")).agg(
                 F.countDistinct("l_orderkey").alias("n_p")
             )
-            items.write.mode("overwrite").parquet(
-                os.path.join(store_dir, "items", f"batch_id={batch_id}")
-            )
-            li.agg(F.countDistinct("l_orderkey").alias("n_orders")).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(store_dir, "baskets", f"batch_id={batch_id}"))
+            baskets = li.agg(F.countDistinct("l_orderkey").alias("n_orders"))
+            for sub, df in zip(_BASKET_PARTS, (pairs, items, baskets)):
+                write_delta(df, os.path.join(store_dir, sub), batch_id)
         finally:
             li.unpersist()
 
@@ -2917,25 +2590,9 @@ def basket_rules_from_store(
 ) -> DataFrame:
     """Fold the partials into q178's rule table (same thresholds, same
     deterministic (lift, antecedent, consequent) top-k)."""
-    pairs = (
-        spark.read.schema("p1 bigint, p2 bigint, n_both bigint, batch_id bigint")
-        .option("basePath", os.path.join(store_dir, "pairs"))
-        .parquet(os.path.join(store_dir, "pairs", "batch_id=*"))
-        .groupBy("p1", "p2")
-        .agg(F.sum("n_both").alias("n_both"))
-    )
-    items = (
-        spark.read.schema("p bigint, n_p bigint, batch_id bigint")
-        .option("basePath", os.path.join(store_dir, "items"))
-        .parquet(os.path.join(store_dir, "items", "batch_id=*"))
-        .groupBy("p")
-        .agg(F.sum("n_p").alias("n_p"))
-    )
-    baskets = (
-        spark.read.schema("n_orders bigint, batch_id bigint")
-        .option("basePath", os.path.join(store_dir, "baskets"))
-        .parquet(os.path.join(store_dir, "baskets", "batch_id=*"))
-        .agg(F.sum("n_orders").alias("n_orders"))
+    pairs, items, baskets = (
+        merge(read_deltas(spark, os.path.join(store_dir, sub), schema))
+        for sub, (schema, merge) in _BASKET_PARTS.items()
     )
     i1 = items.select(F.col("p").alias("p1"), F.col("n_p").alias("n_ante_fwd"))
     i2 = items.select(F.col("p").alias("p2"), F.col("n_p").alias("n_cons_fwd"))
@@ -2980,75 +2637,41 @@ def basket_rules_from_store(
 
 def compact_basket_store(spark: SparkSession, store_dir: str) -> None:
     """Compact the basket-count store: every partial is additive (⇒ the
-    section contract's one-batch double-count caveat applies to an
+    store.py contract's one-batch double-count caveat applies to an
     uncommitted delta compacted outside the maintenance window)."""
-    floors = [
-        _compact_partitioned(
-            spark,
-            os.path.join(store_dir, "pairs"),
-            "p1 bigint, p2 bigint, n_both bigint",
-            lambda df: df.groupBy("p1", "p2").agg(F.sum("n_both").alias("n_both")),
-        ),
-        _compact_partitioned(
-            spark,
-            os.path.join(store_dir, "items"),
-            "p bigint, n_p bigint",
-            lambda df: df.groupBy("p").agg(F.sum("n_p").alias("n_p")),
-        ),
-        _compact_partitioned(
-            spark,
-            os.path.join(store_dir, "baskets"),
-            "n_orders bigint",
-            lambda df: df.agg(F.sum("n_orders").alias("n_orders")),
-        ),
-    ]
-    floors = [f for f in floors if f is not None]
-    if floors:
-        _write_compaction_floor(store_dir, max(floors))
+    compact(spark, store_dir, _BASKET_PARTS)
 
 
 def compact_revenue_monitor_store(spark: SparkSession, store_dir: str) -> None:
     """Compact the revenue-monitor store's day partials (additive ⇒ the
-    section contract's one-batch double-count caveat applies). The
+    store.py contract's one-batch double-count caveat applies). The
     monitor/ directory is an immutable evaluation LOG, not mergeable state
     — it stays as written (the shared floor remap keeps later log ids
     clear of existing rows too, since the ingest stamps both dirs with
     the same effective id)."""
-    floor = _compact_partitioned(
-        spark,
-        os.path.join(store_dir, "partials"),
-        "day_idx int, u_partial bigint",
-        lambda df: df.groupBy("day_idx").agg(F.sum("u_partial").alias("u_partial")),
-    )
-    if floor is not None:
-        _write_compaction_floor(store_dir, floor)
+    compact(spark, store_dir, {"partials": _merge(_DAY_PARTIALS_SCHEMA, ("day_idx",))})
 
 
 def compact_attribution_store(spark: SparkSession, store_dir: str) -> None:
     """Compact the attribution store. revenue/ deltas are additive (⇒ the
-    section contract's one-batch double-count caveat applies to them).
+    store.py contract's one-batch double-count caveat applies to them).
     clicks/ compact to the per-user MAX key, which is sufficient under the
     store's time-ordered contract: keys grow with ts, so a user's newest
     click is the only one any FUTURE purchase's [lo, hi) range can pick —
     if the newest is older than lo, every discarded older click was too."""
-    r_floor = _compact_partitioned(
+    compact(
         spark,
-        os.path.join(store_dir, "revenue"),
-        "campaign bigint, n_purchases bigint, rev_units bigint",
-        lambda df: df.groupBy("campaign").agg(
-            F.sum("n_purchases").alias("n_purchases"),
-            F.sum("rev_units").alias("rev_units"),
-        ),
+        store_dir,
+        {
+            "revenue": _merge(_REVENUE_SCHEMA, ("campaign",)),
+            "clicks": (
+                _CLICKS_SCHEMA,
+                lambda df: df.groupBy("user_id").agg(
+                    F.max("click_key").alias("click_key")
+                ),
+            ),
+        },
     )
-    c_floor = _compact_partitioned(
-        spark,
-        os.path.join(store_dir, "clicks"),
-        "user_id bigint, click_key decimal(38,0)",
-        lambda df: df.groupBy("user_id").agg(F.max("click_key").alias("click_key")),
-    )
-    floors = [f for f in (r_floor, c_floor) if f is not None]
-    if floors:
-        _write_compaction_floor(store_dir, max(floors))
 
 
 # ---------------------------------------------------------------------------
@@ -3064,23 +2687,24 @@ def compact_attribution_store(spark: SparkSession, store_dir: str) -> None:
 _HEALTH_COUNT_SCHEMA = "source string, fmt string, status string, n_docs bigint"
 
 
-def _decode_health_ingest(batch: DataFrame, batch_id: int, store_dir: str) -> None:
+def _decode_health_ingest(batch: DataFrame, batch_id: int, store_dir: str) -> int:
     """One micro-batch of the decode-health store: classify every blob
     through the real header decoders (operators/multimodal.decode_health —
     per-blob rejection becomes a row, never a failed batch) and stage the
     additive (source, fmt, status) counts under batch_id=N (remapped above
-    the compaction floor — see _effective_batch_id: a replay of a folded
-    raw id must never overwrite the compacted history)."""
+    the compaction floor — see store.stage_id: a replay of a folded raw id
+    must never overwrite the compacted history); returns N."""
     from ..operators.multimodal import decode_health
 
-    eff_id = _effective_batch_id(store_dir, batch_id, flat=True)
-    (
+    eff_id = stage_id(store_dir, batch_id)
+    write_delta(
         decode_health(batch.select("doc_id", "source", "content"))
         .groupBy("source", "fmt", "status")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
-        .write.mode("overwrite")
-        .parquet(os.path.join(store_dir, f"batch_id={eff_id}"))
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs")),
+        store_dir,
+        eff_id,
     )
+    return eff_id
 
 
 def run_stream_decode_health(
@@ -3110,7 +2734,7 @@ def decode_health_report_from_store(spark: SparkSession, store_dir: str) -> Data
     forward AND reversed drops in tests/test_streaming.py."""
     from pyspark.sql import Window
 
-    deltas = _read_store_deltas(spark, store_dir, _HEALTH_COUNT_SCHEMA)
+    deltas = read_deltas(spark, store_dir, _HEALTH_COUNT_SCHEMA)
     counts = deltas.groupBy("source", "fmt", "status").agg(
         F.sum("n_docs").cast("bigint").alias("n_docs")
     )
@@ -3131,18 +2755,13 @@ def compact_decode_health_store(spark: SparkSession, store_dir: str) -> None:
     decode_health_report_from_store reads identically before and after.
     Records the folded high-water mark in the store's floor marker so
     later ingests remap above the compacted delta (ADVICE r8). Additive ⇒
-    the section contract's one-batch double-count caveat applies to an
+    the store.py contract's one-batch double-count caveat applies to an
     uncommitted delta compacted outside the maintenance window."""
-    floor = _compact_partitioned(
+    compact(
         spark,
         store_dir,
-        _HEALTH_COUNT_SCHEMA,
-        lambda df: df.groupBy("source", "fmt", "status").agg(
-            F.sum("n_docs").alias("n_docs")
-        ),
+        {"": _merge(_HEALTH_COUNT_SCHEMA, ("source", "fmt", "status"))},
     )
-    if floor is not None:
-        _write_compaction_floor(store_dir, floor)
 
 
 def run_stream_decode_health_monitor(
@@ -3168,17 +2787,16 @@ def run_stream_decode_health_monitor(
     fold of O(batches x sources x formats x statuses) additive count rows
     — never the blobs again; the log row set is O(sources). Both writes
     stage under the same effective batch id (compaction-floor remapped,
-    see _effective_batch_id) — replay idempotent."""
+    see store.stage_id) — replay idempotent."""
     counts_dir = os.path.join(store_dir, "counts")
     log_dir = os.path.join(store_dir, "log")
 
     def monitor(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        eff_id = _effective_batch_id(counts_dir, batch_id, flat=True)
-        _decode_health_ingest(batch, batch_id, counts_dir)
+        eff_id = _decode_health_ingest(batch, batch_id, counts_dir)
         bad = F.sum(F.when(F.col("status") != "ok", F.col("n_docs")).otherwise(F.lit(0)))
         per_source = (
-            _read_store_deltas(spark, counts_dir, _HEALTH_COUNT_SCHEMA)
+            read_deltas(spark, counts_dir, _HEALTH_COUNT_SCHEMA)
             .groupBy("source")
             .agg(
                 F.sum("n_docs").cast("bigint").alias("n_docs"),
@@ -3197,9 +2815,7 @@ def run_stream_decode_health_monitor(
                 ).alias("alert"),
             )
         )
-        per_source.write.mode("overwrite").parquet(
-            os.path.join(log_dir, f"batch_id={eff_id}")
-        )
+        write_delta(per_source, log_dir, eff_id)
 
     _run_foreach_batch(
         media, monitor, checkpoint_dir, timeout_sec, "run_stream_decode_health_monitor"
@@ -3232,7 +2848,7 @@ def decode_health_monitor_log(spark: SparkSession, store_dir: str) -> DataFrame:
 # plans/similarity.cell_balance_from_counts, so the live monitor and the
 # batch audit cannot drift on thresholds.
 #
-# Store layout (marker + _effective_batch_id contract like dup-flow):
+# Store layout (marker + store.stage_id contract like dup-flow):
 #   centers/           (cell, centroid) — the frozen quantizer, written
 #                      once by the runner; probing reads it back so the
 #                      store IS a self-contained servable index.
@@ -3279,41 +2895,36 @@ def run_stream_ivf_assign(
                 [(i, [float(x) for x in c]) for i, c in enumerate(centers)],
                 "cell int, centroid array<double>",
             ).coalesce(1).write.mode("overwrite").parquet(centers_dir)
-        _recover_compaction(assign_dir)
-        _recover_compaction(counts_dir)
-        eff_id = _effective_batch_id(store_dir, batch_id)
+        eff_id = stage_id(store_dir, batch_id, "assign", "counts")
         prior = (
-            _read_store_deltas(spark, assign_dir, _IVF_ASSIGN_SCHEMA)
+            read_deltas(spark, assign_dir, _IVF_ASSIGN_SCHEMA)
             .where(F.col("batch_id") < eff_id)
             .select("vec_id")
         )
         new_vecs = batch.join(prior, "vec_id", "left_anti").select(
             "vec_id", cell_of(as_double(F.col("embedding"))).alias("cell")
         )
-        new_vecs.write.mode("overwrite").parquet(
-            os.path.join(assign_dir, f"batch_id={eff_id}")
-        )
         # counts partial from the just-staged delta (materialized — the
         # Arrow assignment never recomputes)
         own = spark.read.schema(_IVF_ASSIGN_SCHEMA).parquet(
-            os.path.join(assign_dir, f"batch_id={eff_id}")
+            write_delta(new_vecs, assign_dir, eff_id)
         )
-        own.groupBy("cell").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_vecs")
-        ).write.mode("overwrite").parquet(
-            os.path.join(counts_dir, f"batch_id={eff_id}")
+        write_delta(
+            own.groupBy("cell").agg(F.count(F.lit(1)).cast("bigint").alias("n_vecs")),
+            counts_dir,
+            eff_id,
         )
         # live balance over the CUMULATIVE counts (<= this batch): one
         # fold of O(batches x nlist) additive rows, then q222's math on
         # exactly nlist rows
         cum = (
-            _read_store_deltas(spark, counts_dir, _IVF_COUNTS_SCHEMA)
+            read_deltas(spark, counts_dir, _IVF_COUNTS_SCHEMA)
             .where(F.col("batch_id") <= eff_id)
             .groupBy("cell")
             .agg(F.sum("n_vecs").cast("bigint").alias("n_vecs"))
         )
         balance = cell_balance_from_counts(cum, nlist)
-        (
+        write_delta(
             balance.agg(
                 F.sum("n_vecs").cast("bigint").alias("n_vecs"),
                 F.max("imbalance_factor").alias("imbalance_factor"),
@@ -3321,9 +2932,9 @@ def run_stream_ivf_assign(
                 F.max((F.col("recommendation") == "rebalance").cast("boolean")).alias(
                     "alert"
                 ),
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(log_dir, f"batch_id={eff_id}"))
+            ),
+            log_dir,
+            eff_id,
         )
 
     _run_foreach_batch(
@@ -3339,7 +2950,7 @@ def ivf_balance_from_store(spark: SparkSession, store_dir: str, nlist: int) -> D
     from ..plans.similarity import cell_balance_from_counts
 
     counts = (
-        _read_store_deltas(spark, os.path.join(store_dir, "counts"), _IVF_COUNTS_SCHEMA)
+        read_deltas(spark, os.path.join(store_dir, "counts"), _IVF_COUNTS_SCHEMA)
         .groupBy("cell")
         .agg(F.sum("n_vecs").cast("bigint").alias("n_vecs"))
     )
@@ -3379,7 +2990,7 @@ def ivf_topk_from_store(
         .collect()
     )
     centers = [list(r.centroid) for r in centers_rows]
-    assign = _read_store_deltas(
+    assign = read_deltas(
         spark, os.path.join(store_dir, "assign"), _IVF_ASSIGN_SCHEMA
     ).select("vec_id", "cell")
     emb = load_table(spark, sf_dir, "embeddings").select(
@@ -3418,21 +3029,14 @@ def compact_ivf_assign_store(spark: SparkSession, store_dir: str) -> None:
     """Compact the IVF ingest store: assignments are unique per vec_id
     (the anti-join ingest contract — plain rewrite), counts sum per
     cell. The log is an append-only evaluation record and is kept."""
-    a_floor = _compact_partitioned(
+    compact(
         spark,
-        os.path.join(store_dir, "assign"),
-        _IVF_ASSIGN_SCHEMA,
-        lambda df: df.select("vec_id", "cell"),
+        store_dir,
+        {
+            "assign": _merge(_IVF_ASSIGN_SCHEMA),
+            "counts": _merge(_IVF_COUNTS_SCHEMA, ("cell",)),
+        },
     )
-    c_floor = _compact_partitioned(
-        spark,
-        os.path.join(store_dir, "counts"),
-        _IVF_COUNTS_SCHEMA,
-        lambda df: df.groupBy("cell").agg(F.sum("n_vecs").cast("bigint").alias("n_vecs")),
-    )
-    floors = [f for f in (a_floor, c_floor) if f is not None]
-    if floors:
-        _write_compaction_floor(store_dir, max(floors))
 
 
 # ---------------------------------------------------------------------------
@@ -3448,7 +3052,7 @@ def compact_ivf_assign_store(spark: SparkSession, store_dir: str) -> None:
 # centroid — the PQ analogue of a hot IVF cell), measured with the SAME
 # cell_balance_from_counts math as q222, per subspace.
 #
-# Store layout (marker + _effective_batch_id contract like the IVF store):
+# Store layout (marker + store.stage_id contract like the IVF store):
 #   books/             (m, k, centroid) — frozen codebooks, written once;
 #                      reading them back makes the store self-contained.
 #   codes/batch_id=N/  (vec_id, codes, nc) — batch N's NEW vectors
@@ -3496,11 +3100,9 @@ def run_stream_pq_encode(
                 ],
                 "m int, k int, centroid array<double>",
             ).coalesce(1).write.mode("overwrite").parquet(books_dir)
-        _recover_compaction(codes_dir)
-        _recover_compaction(counts_dir)
-        eff_id = _effective_batch_id(store_dir, batch_id)
+        eff_id = stage_id(store_dir, batch_id, "codes", "counts")
         prior = (
-            _read_store_deltas(spark, codes_dir, _PQ_CODES_SCHEMA)
+            read_deltas(spark, codes_dir, _PQ_CODES_SCHEMA)
             .where(F.col("batch_id") < eff_id)
             .select("vec_id")
         )
@@ -3510,25 +3112,22 @@ def run_stream_pq_encode(
             ),
             books,
         )
-        new_codes.write.mode("overwrite").parquet(
-            os.path.join(codes_dir, f"batch_id={eff_id}")
-        )
         # code-usage partial from the just-staged delta (materialized —
         # the encode expression never recomputes)
         own = spark.read.schema(_PQ_CODES_SCHEMA).parquet(
-            os.path.join(codes_dir, f"batch_id={eff_id}")
+            write_delta(new_codes, codes_dir, eff_id)
         )
-        (
+        write_delta(
             own.select(F.posexplode("codes").alias("m", "code"))
             .groupBy("m", "code")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_vecs"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(counts_dir, f"batch_id={eff_id}"))
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n_vecs")),
+            counts_dir,
+            eff_id,
         )
         # codebook health over the CUMULATIVE counts: q222's balance math
         # per subspace (K cells each), alert on the worst subspace
         cum = (
-            _read_store_deltas(spark, counts_dir, _PQ_COUNTS_SCHEMA)
+            read_deltas(spark, counts_dir, _PQ_COUNTS_SCHEMA)
             .where(F.col("batch_id") <= eff_id)
             .groupBy("m", "code")
             .agg(F.sum("n_vecs").cast("bigint").alias("n_vecs"))
@@ -3551,14 +3150,14 @@ def run_stream_pq_encode(
         worst = per_sub[0]
         for frame in per_sub[1:]:
             worst = worst.unionByName(frame)
-        (
+        write_delta(
             worst.agg(
                 F.max("n_vecs").cast("bigint").alias("n_vecs"),
                 F.max("imbalance_factor").alias("imbalance_factor"),
                 F.max("alert").alias("alert"),
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(log_dir, f"batch_id={eff_id}"))
+            ),
+            log_dir,
+            eff_id,
         )
 
     _run_foreach_batch(
@@ -3585,7 +3184,7 @@ def pq_code_balance_from_store(
         .collect()
     )
     cum = (
-        _read_store_deltas(spark, os.path.join(store_dir, "counts"), _PQ_COUNTS_SCHEMA)
+        read_deltas(spark, os.path.join(store_dir, "counts"), _PQ_COUNTS_SCHEMA)
         .groupBy("m", "code")
         .agg(F.sum("n_vecs").cast("bigint").alias("n_vecs"))
     )
@@ -3627,7 +3226,7 @@ def pq_topk_from_store(
     for r in rows:
         by_m.setdefault(r["m"], {})[r["k"]] = [float(x) for x in r["centroid"]]
     books = [[by_m[m][k] for k in sorted(by_m[m])] for m in sorted(by_m)]
-    store = _read_store_deltas(
+    store = read_deltas(
         spark, os.path.join(store_dir, "codes"), _PQ_CODES_SCHEMA
     ).select("vec_id", "codes", "nc")
     emb = load_table(spark, sf_dir, "embeddings").select(
@@ -3640,20 +3239,11 @@ def compact_pq_code_store(spark: SparkSession, store_dir: str) -> None:
     """Compact the PQ ingest store: codes are unique per vec_id (anti-join
     ingest contract — plain rewrite), counts sum per (m, code). The log
     is an append-only evaluation record and is kept."""
-    c_floor = _compact_partitioned(
+    compact(
         spark,
-        os.path.join(store_dir, "codes"),
-        _PQ_CODES_SCHEMA,
-        lambda df: df.select("vec_id", "codes", "nc"),
+        store_dir,
+        {
+            "codes": _merge(_PQ_CODES_SCHEMA),
+            "counts": _merge(_PQ_COUNTS_SCHEMA, ("m", "code")),
+        },
     )
-    u_floor = _compact_partitioned(
-        spark,
-        os.path.join(store_dir, "counts"),
-        _PQ_COUNTS_SCHEMA,
-        lambda df: df.groupBy("m", "code").agg(
-            F.sum("n_vecs").cast("bigint").alias("n_vecs")
-        ),
-    )
-    floors = [f for f in (c_floor, u_floor) if f is not None]
-    if floors:
-        _write_compaction_floor(store_dir, max(floors))

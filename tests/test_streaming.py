@@ -539,7 +539,8 @@ def test_store_compaction_preserves_folds_and_continued_ingest(spark, tmp_path):
     folded matrix identical, (2) keep serving keeper lookups when the
     stream CONTINUES on the same checkpoint afterwards — new batch ids
     sit above the checkpoint high-water mark and the `batch_id < N`
-    lookup always includes the compacted batch_id=0 delta."""
+    lookup always includes the compacted delta (staged at the max folded
+    batch_id)."""
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
@@ -699,6 +700,79 @@ def test_compaction_crash_between_renames_is_recovered(spark, tmp_path):
     compact_dup_flow_store(spark, store)
     got2 = [tuple(r) for r in dup_flow_matrix_from_store(spark, store).collect()]
     assert got2 == want
+
+
+def _stage_deltas(spark, sub_dir, schema, batches):
+    """Stage one delta per batch in the on-disk ``batch_id=N`` layout."""
+    for i, rows in enumerate(batches):
+        spark.createDataFrame(rows, schema).write.parquet(
+            os.path.join(sub_dir, f"batch_id={i}")
+        )
+
+
+def test_revenue_fold_heals_crash_between_renames(spark, tmp_path):
+    """The revenue-monitor fold heals a compaction that died between its
+    two renames (live partials dir missing, `.old` holding all history):
+    it equals the pre-compaction fold instead of an empty anomaly frame."""
+    from big_data_computing_final_project_spark.streaming.events import (
+        compact_revenue_monitor_store,
+        revenue_anomalies_from_store,
+    )
+
+    # 40 days of steady units, day 35 spiking 5x, days 15-24 in
+    # both batches so the fold must sum them
+    units = {d: 1_000_000 + (d % 7) * 10_000 for d in range(40)}
+    units[35] = 5_000_000
+    rstore = str(tmp_path / "revenue")
+    partials = os.path.join(rstore, "partials")
+    _stage_deltas(
+        spark,
+        partials,
+        "day_idx int, u_partial bigint",
+        [
+            [(d, units[d] // 2 if 15 <= d < 25 else units[d]) for d in range(25)],
+            [(d, units[d] - units[d] // 2 if d < 25 else units[d]) for d in range(15, 40)],
+        ],
+    )
+    want = [tuple(r) for r in revenue_anomalies_from_store(spark, rstore).collect()]
+    assert 35 in [r[0] for r in want]
+    compact_revenue_monitor_store(spark, rstore)
+    os.rename(partials, partials + ".old")  # crash between the renames
+    assert [tuple(r) for r in revenue_anomalies_from_store(spark, rstore).collect()] == want
+
+
+def test_basket_fold_heals_crash_between_renames(spark, tmp_path):
+    """The basket-rules fold heals crashed compactions of its pairs/ and
+    items/ sub-stores (live dir missing, `.old` holding all history): it
+    equals the pre-compaction fold instead of raising on a missing path."""
+    from big_data_computing_final_project_spark.streaming.events import (
+        basket_rules_from_store,
+        compact_basket_store,
+    )
+
+    bstore = str(tmp_path / "basket")
+    _stage_deltas(
+        spark,
+        os.path.join(bstore, "pairs"),
+        "p1 bigint, p2 bigint, n_both bigint",
+        [[(1, 2, 2), (1, 3, 1)], [(1, 2, 2), (2, 3, 3)]],
+    )
+    _stage_deltas(
+        spark,
+        os.path.join(bstore, "items"),
+        "p bigint, n_p bigint",
+        [[(1, 3), (2, 2), (3, 2)], [(1, 2), (2, 3), (3, 3)]],
+    )
+    _stage_deltas(
+        spark, os.path.join(bstore, "baskets"), "n_orders bigint", [[(4,)], [(4,)]]
+    )
+    want_rules = [tuple(r) for r in basket_rules_from_store(spark, bstore).collect()]
+    assert len(want_rules) == 4
+    compact_basket_store(spark, bstore)
+    for sub in ("pairs", "items"):
+        os.rename(os.path.join(bstore, sub), os.path.join(bstore, sub) + ".old")
+    got_rules = [tuple(r) for r in basket_rules_from_store(spark, bstore).collect()]
+    assert got_rules == want_rules
 
 
 # ---------------------------------------------------------------------------
@@ -1542,11 +1616,9 @@ def test_flat_store_compaction_floor_survives_folded_id_replay(spark, tmp_path):
     want_cdc = sorted(tuple(r) for r in _cdc_store_latest(spark, c_store).collect())
     compact_cdc_store(spark, c_store)
     # replay batch 1 with its raw id through the remapping ingest path
-    from big_data_computing_final_project_spark.streaming.events import (
-        _effective_batch_id,
-    )
+    from big_data_computing_final_project_spark.streaming.store import stage_id
 
-    eff = _effective_batch_id(c_store, 1, flat=True)
+    eff = stage_id(c_store, 1)
     assert eff > 1, "floor marker missing after compact_cdc_store"
     latest_cdc_ops(b1).write.mode("overwrite").parquet(
         _os.path.join(c_store, f"batch_id={eff}")
@@ -1560,7 +1632,7 @@ def test_flat_store_compaction_floor_survives_folded_id_replay(spark, tmp_path):
     # remaps above the compacted delta
     moved = str(tmp_path / "cdc_flat_moved")
     _os.rename(c_store, moved)
-    assert _effective_batch_id(moved, 1, flat=True) > 1, (
+    assert stage_id(moved, 1) > 1, (
         "floor marker detached from the store by a directory-level move"
     )
 
@@ -1672,15 +1744,13 @@ def test_stream_volume_monitor_alerts_on_collapse_quiet_when_steady(spark, tmp_p
     assert by[(0, "srcB")].share == 0.5
     # the counts half doubles as a plain volume store: the fold over the
     # staged partials equals the corpus totals per source
-    from big_data_computing_final_project_spark.streaming.events import (
-        _read_store_deltas,
-    )
+    from big_data_computing_final_project_spark.streaming.store import read_deltas
 
     from pyspark.sql import functions as F
 
     vol = {
         (r.source): r.n
-        for r in _read_store_deltas(
+        for r in read_deltas(
             spark,
             os.path.join(store, "counts"),
             "source string, lang string, n_docs bigint, n_tokens bigint, "
